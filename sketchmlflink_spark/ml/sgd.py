@@ -177,13 +177,15 @@ def _make_partial_fn(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "s
 
 
 def _make_partial_fn_sparse(bc, dim: int, sketch_cfg: SketchConfig, loss_name: str = "squared"):
-    """Per-partition gradient pass over cached COO blocks. The gradient
-    sum is accumulated SPARSELY (unique feature keys seen in this
-    partition only) and compressed via the codec's kv path — no
-    dim-sized buffer is ever allocated on an executor, so the arm holds
-    at dim 10^5-10^7 where the dense path's np.stack would blow memory
-    (the reference's actual workload: wide LibSVM swept over --maxDim,
-    runtest.sh:34-36)."""
+    """Per-partition gradient pass over cached COO blocks. Rows stay
+    sparse (no np.stack of dim-wide rows, which is what lets this arm
+    hold at dim 10^5-10^7 — the reference's actual workload: wide LibSVM
+    swept over --maxDim, runtest.sh:34-36). The partition's gradient sum
+    is one ``bincount`` into a transient dim-wide buffer, the same order
+    of memory as the dim-wide weight broadcast every executor already
+    unpickles; its nonzero keys go to the codec's kv path. ``bincount``
+    adds contributions in input order, so each sum equals the one a
+    per-unique-key accumulation gives, bit for bit."""
 
     loss_fn = _loss_grad(loss_name)
 
@@ -204,10 +206,10 @@ def _make_partial_fn_sparse(bc, dim: int, sketch_cfg: SketchConfig, loss_name: s
             n += len(y)
         sg = None
         if n > 0:
-            idx_cat = np.concatenate(idx_parts)
-            uk, inv = np.unique(idx_cat, return_inverse=True)
-            gv = np.bincount(inv, weights=np.concatenate(contrib_parts), minlength=uk.shape[0])
-            sg = SK.compress_kv(uk, gv, sketch_cfg, dim)  # None if all-zero (P8)
+            gsum = np.bincount(np.concatenate(idx_parts), weights=np.concatenate(contrib_parts), minlength=dim)
+            # != 0, not > EPS: NaN and inf must reach the codec's check
+            keys = np.flatnonzero(gsum != 0)
+            sg = SK.compress_kv(keys, gsum[keys], sketch_cfg, dim)  # None if all-zero (P8)
         payload = SK.to_bytes(sg)
         yield {
             "payload": payload,

@@ -72,35 +72,56 @@ class MinMaxSketch:
         return np.clip(est, 0, self.sentinel - 1)
 
 
+_ESC = 255  # 8-bit delta escape marker
+_ESC_MAX = (1 << 32) - 1  # largest delta the uint32 escape payload holds
+_PAYLOAD = np.arange(1, 5)  # payload byte offsets after an escape marker
+
+
 def encode_keys(keys: np.ndarray, key_bits: int = 8) -> bytes:
     """Delta-encode sorted int keys at ``key_bits`` resolution; deltas
-    ≥ escape are stored as escape marker + uint32 (SGD:346 keyBits=8)."""
+    ≥ escape are stored as escape marker + uint32 (SGD:346 keyBits=8).
+    A negative delta (unsorted keys) raises ValueError; a delta that
+    does not fit the uint32 escape raises OverflowError."""
     assert key_bits == 8, "reference uses 8-bit delta keys"
     if keys.size == 0:
         return b""
-    deltas = np.diff(keys, prepend=0).astype(np.int64)
-    out = bytearray()
-    for d in deltas:
-        if d < 255:
-            out.append(int(d))
-        else:
-            out.append(255)
-            out.extend(int(d).to_bytes(4, "little"))
-    return bytes(out)
+    deltas = np.diff(keys, prepend=0).astype(np.int64, copy=False)
+    if deltas.min() < 0 or deltas.max() > _ESC_MAX:
+        d = int(deltas[((deltas < 0) | (deltas > _ESC_MAX)).argmax()])
+        if d < 0:
+            raise ValueError(f"keys must be sorted ascending (delta {d})")
+        raise OverflowError(f"key delta {d} does not fit the 4-byte escape")
+    esc = np.flatnonzero(deltas >= _ESC)
+    # the k-th escape's marker lands at esc[k] + 4k, its payload after it
+    payload_pos = (esc + 4 * np.arange(esc.size))[:, None] + _PAYLOAD
+    is_payload = np.zeros(deltas.size + 4 * esc.size, dtype=bool)
+    is_payload[payload_pos] = True
+    out = np.empty(is_payload.size, dtype=np.uint8)
+    out[~is_payload] = np.minimum(deltas, _ESC)
+    out[payload_pos] = deltas[esc].astype("<u4").view(np.uint8).reshape(-1, 4)
+    return out.tobytes()
 
 
 def decode_keys(buf: bytes) -> np.ndarray:
-    keys, acc, i = [], 0, 0
-    n = len(buf)
-    while i < n:
-        d = buf[i]
-        i += 1
-        if d == 255:
-            d = int.from_bytes(buf[i : i + 4], "little")
-            i += 4
-        acc += d
-        keys.append(acc)
-    return np.asarray(keys, dtype=np.int64)
+    """Inverse of ``encode_keys``; a truncated escape raises ValueError."""
+    b = np.frombuffer(buf, dtype=np.uint8)
+    # a 0xFF byte is an escape unless it lies in an earlier escape's
+    # payload; only 0xFF bytes need this sequential scan
+    esc = []
+    free = 0
+    for p in np.flatnonzero(b == _ESC).tolist():
+        if p >= free:
+            esc.append(p)
+            free = p + 5
+    if free > b.size:
+        raise ValueError(f"truncated key escape at byte {esc[-1]} of {b.size}")
+    esc = np.asarray(esc, dtype=np.int64)
+    payload_pos = esc[:, None] + _PAYLOAD
+    is_start = np.ones(b.size, dtype=bool)
+    is_start[payload_pos] = False
+    deltas = b[is_start].astype(np.int64)
+    deltas[esc - 4 * np.arange(esc.size)] = b[payload_pos].view("<u4").reshape(-1)
+    return np.cumsum(deltas)
 
 
 @dataclass
@@ -113,26 +134,31 @@ class SketchedGradient:
     nnz: int
     # identity path ("None" compression): exact values; else None
     exact_values: np.ndarray | None
-    # sketch path: quantile splits, per-key group ids (packed bits when
-    # group_num==2), one MinMaxSketch per group
+    # sketch path: quantile splits, per-key group ids, one MinMaxSketch
+    # per group
     splits: np.ndarray | None
     group_ids: np.ndarray | None
     sketches: list[MinMaxSketch] | None
 
     def payload_bytes(self) -> int:
-        """Honest transport size — what a shuffle hop would carry."""
-        n = len(self.key_buf) + 16
-        if self.exact_values is not None:
-            n += self.exact_values.nbytes
-        if self.splits is not None:
-            n += self.splits.nbytes + self.group_ids.nbytes // 8 + sum(s.grid.nbytes for s in self.sketches)
-        return n
+        """Transport size: the bytes a shuffle hop carries (``to_bytes``)."""
+        return len(to_bytes(self))
+
+
+def _check_finite(values: np.ndarray) -> None:
+    """A NaN would fail the liveness test and vanish; an inf would turn
+    the quantile splits into NaN. Either way the payload would lie."""
+    bad = np.count_nonzero(~np.isfinite(values))
+    if bad:
+        raise ValueError(f"gradient has {bad} non-finite entries (NaN or inf)")
 
 
 def compress(values: np.ndarray, cfg: SketchConfig, dim: int | None = None) -> SketchedGradient | None:
     """Dense float64 vector → sketched gradient. Returns None for the
-    all-zero vector (ZeroGradient elision, SGD:203/223)."""
+    all-zero vector (ZeroGradient elision, SGD:203/223). Raises
+    ValueError on NaN or inf entries."""
     values = np.asarray(values, dtype=np.float64)
+    _check_finite(values)
     dim = dim if dim is not None else values.shape[0]
     keys = np.nonzero(np.abs(values) > EPS)[0]
     return compress_kv(keys, values[keys], cfg, dim)
@@ -143,9 +169,11 @@ def compress_kv(keys: np.ndarray, vals: np.ndarray, cfg: SketchConfig, dim: int)
     a dim-sized buffer — the SparseDoubleGradient branch of the reference
     (SketchGradientDescent.scala:198-217). ``keys`` must be sorted and
     unique (np.unique output qualifies); near-zero entries are elided
-    like the dense path's nnz test (SGD:356-362)."""
+    like the dense path's nnz test (SGD:356-362). Raises ValueError on
+    NaN or inf values, before any elision."""
     keys = np.asarray(keys, dtype=np.int64)
     vals = np.asarray(vals, dtype=np.float64)
+    _check_finite(vals)
     live = np.abs(vals) > EPS
     if not live.all():
         keys, vals = keys[live], vals[live]

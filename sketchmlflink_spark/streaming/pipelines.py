@@ -461,12 +461,14 @@ def _census_ledger_load(path: str):
 def _census_ledger_write(path: str, value) -> None:
     """Atomic write-then-rename: a crash mid-write must leave either
     the previous ledger entry or none — a truncated JSON would turn a
-    restart into a crash loop."""
+    restart into a crash loop. The temp file gets a unique name in the
+    ledger's directory, so concurrent writers (threads or processes)
+    never share one."""
     import json
     import os
 
-    tmp = f"{path}.tmp.{os.getpid()}"
-    with open(tmp, "w") as f:
+    fd, tmp = tempfile.mkstemp(prefix=os.path.basename(path) + ".tmp.", dir=os.path.dirname(path) or ".")
+    with os.fdopen(fd, "w") as f:
         json.dump(value, f)
     os.replace(tmp, path)
 

@@ -153,6 +153,23 @@ def test_sparse_path_matches_dense_exactly(spark, training_df):
     np.testing.assert_allclose(sparse.losses, dense.losses, rtol=1e-9)
 
 
+@pytest.mark.parametrize("cfg", [SketchConfig(compression_type="None"), SketchConfig(auto_fallback_nnz=0)])
+def test_diverging_step_raises_on_both_arms(spark, training_df, cfg):
+    """A step size this large overflows the weights to inf within a few
+    epochs; the next leaf gradient is non-finite and the codec must fail
+    the run instead of dropping NaN entries or shipping NaN splits."""
+    rows = training_df.collect()
+    sparse_df = spark.createDataFrame(
+        [(r["label"], list(range(DIM)), list(r["features"])) for r in rows],
+        "label double, indices array<int>, values array<double>",
+    ).repartition(4)
+    solver = SolverConfig(iterations=12, step_size=1e100, lr_schedule="constant")
+    with pytest.raises(Exception, match="non-finite"):
+        SGD.train(training_df, solver, cfg)
+    with pytest.raises(Exception, match="non-finite"):
+        SGD.train(sparse_df, solver, cfg, dim=DIM)
+
+
 def test_sparse_wide_libsvm_converges(spark, tmp_path):
     """Wide sparse LibSVM fixture (dim ≥ 1e5) trains end-to-end on the
     COO path — no densified rows anywhere (the np.stack of the dense

@@ -132,10 +132,10 @@ def test_count_nnz():
 
 def test_kv_codec_at_physically_impossible_dim():
     """compress_kv / merge / decompress_kv at dim 2^33: a dense buffer
-    would be 64 GiB, so the mere fact this runs proves the kv path
-    never densifies on the combine/ship side (the dense model vector
-    at the DRIVER is the only dim-sized structure in training, by
-    design)."""
+    would be 64 GiB, so the mere fact this runs proves the codec itself
+    never densifies on the combine/ship side. Training still holds
+    dim-sized buffers: the driver's model vector, the weight broadcast
+    every executor unpickles, and the sparse leaf's gradient sum."""
     import numpy as np
 
     from sketchmlflink_spark.config import SketchConfig
